@@ -9,11 +9,6 @@ import json
 import os
 
 import pytest
-
-# heavy tier (r16): the end-to-end runner writes one JSON file per
-# record across resume/reset scenarios (~3 min) — builder-tier
-pytestmark = pytest.mark.heavy
-
 from pyspark.sql import functions as F
 
 from wiki_data_pipeline_spark.pipeline import run_pipeline

@@ -54,8 +54,8 @@ X10_DIR = os.environ.get(
 )
 
 pytestmark = [
-    # heavy tier (r16): the x10 recompile sweep ran ~8 min alone and
-    # the replica is a build product — builder-tier by construction
+    # deselected by default: needs the generated replica and ran
+    # 558 s alone on 4 cores (pytest.ini)
     pytest.mark.heavy,
     pytest.mark.skipif(
         not os.path.exists(os.path.join(X10_DIR, "_DONE")),

@@ -58,10 +58,6 @@ def test_reliable_parity_artifact_is_green():
     assert not bad, f"reliable-tier parity failures: {bad}"
 
 
-@pytest.mark.heavy
-# heavy tier (r16): discovery builds all 200+ query plans with the pin
-# observer installed and the eager pins RUN at fixture scale (~1.6 min)
-# — the cheap artifact-shape tests above stay in the default tier
 def test_reliable_parity_covers_every_live_pin_site(spark, sf_dir):
     """The artifact's query set == the live pin-routed set. Discovery
     builds all 200+ query plans with the pin observer installed (the

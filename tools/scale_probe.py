@@ -102,19 +102,17 @@ HEAP_PROBED = [
 def _spill_totals(spark) -> tuple[int, int]:
     """Cumulative (memoryBytesSpilled, diskBytesSpilled) across all
     completed stages, via the UI REST API (the only spill surface
-    PySpark exposes without a JVM listener)."""
+    PySpark exposes without a JVM listener). Raises when the API cannot
+    be read, so a zero always means no spill."""
     import urllib.request
 
     base = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.load(r)
-    except Exception:
-        return (0, 0)
+    with urllib.request.urlopen(
+        f"{base}/api/v1/applications/{app_id}/stages?status=complete",
+        timeout=10,
+    ) as r:
+        stages = json.load(r)
     return (
         sum(s.get("memoryBytesSpilled", 0) for s in stages),
         sum(s.get("diskBytesSpilled", 0) for s in stages),

@@ -37,13 +37,17 @@ def davg(expr: Column, alias: str) -> Column:
     ).alias(alias)
 
 
-# SQL fragment mirrors of dsum/davg for the DuckDB oracles.
+# SQL fragment mirrors of dsum/davg for the DuckDB oracles. DuckDB casts
+# a DECIMAL to DOUBLE as unscaled-integer-to-double then / 10**scale, two
+# roundings that can land one ulp off Spark's correctly rounded cast
+# (28099258407.064250 reads 28099258407.064247); parsing the exact
+# VARCHAR form rounds once.
 def _dsum_sql(expr: str, alias: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE) AS {alias}"
+    return f"CAST(CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS {alias}"
 
 
 def _davg_sql(expr: str, alias: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE) / count(*) AS {alias}"
+    return f"CAST(CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) / count(*) AS {alias}"
 
 
 # ---------------------------------------------------------------------------
